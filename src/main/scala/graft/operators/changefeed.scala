@@ -89,17 +89,15 @@ object ChangeFeed {
     // merge-on-read shared file prefix twice. Falls back to that form only
     // when a schema evolution lies between the versions (readVersionsTagged
     // returns None), where each generation must align to its own schema.
+    def payload(cols: Seq[String]) = cols.filterNot(c => CdcMerge.sysCols.contains(c) ||
+      Schemas.keyCols.contains(c) || c == "_in1" || c == "_in2")
     table.readVersionsTagged(fromVersion, toVersion) match {
       case Some(tagged) =>
-        val payload = table.snapshotAt(toVersion).schema.fieldNames.toSeq
-          .filterNot(c => CdcMerge.sysCols.contains(c) || Schemas.keyCols.contains(c))
-        diffMembership(tagged, Schemas.keyCols, payload)
+        diffMembership(tagged, Schemas.keyCols, payload(tagged.columns.toSeq))
       case None =>
-        val payload = table.schema.fieldNames.toSeq
-          .filterNot(c => CdcMerge.sysCols.contains(c) || Schemas.keyCols.contains(c))
         val tagged = table.readAsOf(fromVersion).withColumn("_gen", lit(1))
           .unionByName(table.readAsOf(toVersion).withColumn("_gen", lit(2)), true)
-        diffTagged(tagged, Schemas.keyCols, payload)
+        diffTagged(tagged, Schemas.keyCols, payload(table.schema.fieldNames.toSeq))
     }
   }
 

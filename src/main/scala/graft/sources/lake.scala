@@ -3,7 +3,10 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -24,6 +27,9 @@ trait LakeIO {
   def exists(path: String): Boolean
   /** Absolute paths of the directory's direct children (not recursive). */
   def listDir(dir: String): Seq[String]
+  /** Statuses (qualified path, length, mtime) of the directory's direct
+    * children — what a scan needs to plan its splits without listing again. */
+  def listStatus(dir: String): Seq[FileStatus]
   def readString(path: String): String
   /** Write via a temp sibling + atomic rename; MUST fail if `path` exists
     * (the optimistic-concurrency commit point). */
@@ -45,6 +51,13 @@ object NioLakeIO extends LakeIO {
   def isDirectory(path: String): Boolean = Files.isDirectory(Paths.get(path))
   def exists(path: String): Boolean = Files.exists(Paths.get(path))
   def listDir(dir: String): Seq[String] = listPaths(Paths.get(dir)).map(_.toString)
+  def listStatus(dir: String): Seq[FileStatus] = listPaths(Paths.get(dir)).map { p =>
+    val a = Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+    new FileStatus(a.size, a.isDirectory, 1, LocalBlockSize, a.lastModifiedTime.toMillis,
+      new HPath(p.toAbsolutePath.toUri))
+  }
+  /** What Hadoop's local filesystem reports (`fs.local.block.size`). */
+  private val LocalBlockSize = 32L << 20
   def readString(path: String): String = Files.readString(Paths.get(path))
   def writeStringAtomic(path: String, content: String): Unit = {
     val target = Paths.get(path)
@@ -74,7 +87,7 @@ object NioLakeIO extends LakeIO {
 /** Hadoop-FileSystem implementation — the object-store/HDFS migration path.
   * Uses the same FS drivers Spark itself writes the parquet through. */
 class HadoopLakeIO(conf: org.apache.hadoop.conf.Configuration) extends LakeIO {
-  import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import org.apache.hadoop.fs.FileSystem
   private def fs(p: String): FileSystem = new HPath(p).getFileSystem(conf)
   def mkdirs(dir: String): Unit = fs(dir).mkdirs(new HPath(dir))
   def isDirectory(path: String): Boolean = {
@@ -86,7 +99,8 @@ class HadoopLakeIO(conf: org.apache.hadoop.conf.Configuration) extends LakeIO {
   // make callers (writeDataFiles' move, vacuum's delete) resolve the children
   // against the DEFAULT filesystem — wrong-FS moves/deletes on abfs/gs/s3a/HDFS
   def listDir(dir: String): Seq[String] =
-    fs(dir).listStatus(new HPath(dir)).toSeq.map(_.getPath.toString)
+    listStatus(dir).map(_.getPath.toString)
+  def listStatus(dir: String): Seq[FileStatus] = fs(dir).listStatus(new HPath(dir)).toSeq
   def readString(path: String): String = {
     val in = fs(path).open(new HPath(path))
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
@@ -188,20 +202,23 @@ final case class Snapshot(
   * (reference dest/I2b2QueryResultsHandler.java:318-703).
   *
   * Scale notes: `bucket = pmod(xxhash64(conv_id), numBuckets)` gives file-level
-  * pruning for the MERGE (only buckets present in a batch are read/rewritten);
-  * at 100 TB raise `numBuckets` (e.g. 4096) so a bucket rewrite fits an executor.
+  * pruning for the MERGE (only buckets present in a batch are read/rewritten)
+  * and for READS (a pushed `conv_id` equality or IN filter scans only its
+  * buckets' files); at 100 TB raise `numBuckets` (e.g. 4096) so a bucket
+  * rewrite fits an executor. Every read is planned from the manifest
+  * ([[ManifestFileIndex]]): one listing per parent directory, no per-read
+  * file-listing job, however many files the snapshot holds.
   * Driver-side IO is abstracted behind [[LakeIO]]. Manifests are two-level
   * above [[LakeTable.DefaultSegmentThreshold]] files: the snapshot JSON refs
   * per-bucket-range SEGMENT manifests and untouched ranges carry over by
   * reference, keeping commit IO O(touched ranges), not O(files) — the
   * Iceberg manifest-list pattern (see README "Commit path & object stores").
   */
-final class LakeTable(val spark: SparkSession, val dir: String,
-                      val io: LakeIO = NioLakeIO) {
+final class LakeTable private (val spark: SparkSession, val dir: String,
+                              val io: LakeIO, initial: Snapshot) {
   import LakeTable._
 
-  private var snap: Snapshot = loadLatest(dir, io).getOrElse(
-    throw new IllegalStateException(s"no manifest under $dir"))
+  private var snap: Snapshot = initial
 
   def snapshot: Snapshot = snap
   def refresh(): Snapshot = { snap = loadLatest(dir, io).get; snap }
@@ -226,40 +243,35 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     * version, after which this throws (segment manifest or data files GC'd). */
   def readAsOf(version: Long): DataFrame = {
     val s = snapshotAt(version)
-    requireFilesPresent(s.files, s"v$version")
     readFiles(s, s.files)
   }
 
-  /** Fail loudly if vacuum already expired any of these data files: segment
-    * manifests are checked strictly by snapshotAt, but an INLINE (unsegmented)
-    * snapshot lists files whose absence would otherwise surface as a scan-time
-    * path error — or, under spark.sql.files.ignoreMissingFiles=true, as a
-    * silently PARTIAL historical state, the worst possible failure mode.
-    * Batched: ONE listing per distinct parent directory instead of one
-    * driver-side exists() round trip per file — O(dirs), which on an object
-    * store is the difference between milliseconds and minutes for a large
-    * historical snapshot. */
-  private def requireFilesPresent(files: List[FileEntry], tag: String): Unit = {
-    val byParent = files.groupBy(f =>
-      s"$dir/${f.path}".split('/').dropRight(1).mkString("/"))
-    val missing = byParent.iterator.map { case (parent, fs) =>
-      val present: Set[String] =
-        if (!io.isDirectory(parent)) Set.empty
-        else io.listDir(parent).map(_.stripSuffix("/").split('/').last).toSet
-      fs.count(f => !present.contains(s"$dir/${f.path}".split('/').last))
-    }.sum
+  /** Each file's status, from ONE listing per distinct parent directory
+    * through [[LakeIO]] — O(dirs) round trips, not O(files), which on an
+    * object store is the difference between milliseconds and minutes. Fails
+    * loudly if any file is gone (vacuumed or deleted): segment manifests are
+    * checked strictly by snapshotAt, but an absent data file would otherwise
+    * surface as a scan-time path error — or, under
+    * spark.sql.files.ignoreMissingFiles=true, as a silently PARTIAL state. */
+  private def statuses(files: List[FileEntry], tag: String): List[(FileEntry, FileStatus)] = {
+    def full(f: FileEntry) = s"$dir/${f.path}"
+    val listed = files.map(f => full(f).split('/').dropRight(1).mkString("/")).distinct
+      .flatMap { parent =>
+        if (!io.isDirectory(parent)) Nil
+        else io.listStatus(parent).map(st => s"$parent/${st.getPath.getName}" -> st)
+      }.toMap
+    val missing = files.count(f => !listed.contains(full(f)))
     if (missing > 0) throw new IllegalStateException(
-      s"snapshot $tag references $missing data file(s) already vacuumed")
+      s"snapshot $tag references $missing data file(s) already vacuumed or deleted")
+    files.map(f => f -> listed(full(f)))
   }
 
-  /** One-scan CHANGE-FEED read (round-6 optimization, guide §1.2 "remove
-    * passes"): the UNION of two snapshots' file sets is read ONCE, each row
-    * tagged with boolean `_in1` / `_in2` membership columns derived from its
-    * file's presence in the respective manifest. Under merge-on-read v1's
-    * files are typically a shared prefix of v2's, which the old two-readAsOf
-    * union scanned TWICE. File names are unique table-wide
-    * (`data/e<version>_b<bucket>_<n>.parquet`), so membership keys on the
-    * basename via a broadcast (name, _in1, _in2) table — no extra shuffle.
+  /** One-scan CHANGE-FEED read: the UNION of two snapshots' file sets is read
+    * ONCE, each row tagged with boolean `_in1` / `_in2` membership columns.
+    * The manifests say which files are in both versions, only in v1 or only
+    * in v2, so each of those groups is its own scan with literal tags — no
+    * per-row file name, no join. Under merge-on-read v1's files are typically
+    * a shared prefix of v2's, which a two-readAsOf union would scan TWICE.
     * Returns None when a schema evolution lies between the versions
     * (different current schema, or a schema id whose definition changed) —
     * callers then fall back to the two-read union, which aligns each
@@ -270,34 +282,17 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     val compatible = s1.currentSchemaId == s2.currentSchemaId &&
       s1.schemas.forall { case (k, v) => s2.schemas.get(k).contains(v) }
     if (!compatible) return None
-    val f1 = s1.files.map(_.path).toSet
-    val f2 = s2.files.map(_.path).toSet
-    val union = s1.files ++ s2.files.filterNot(f => f1.contains(f.path))
-    if (union.isEmpty) return Some(
-      align(spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava,
-          s2.schema), s2.schema)
-        .withColumn("_in1", lit(false)).withColumn("_in2", lit(false)))
-    requireFilesPresent(union, s"v$v1/v$v2")
-    def base(p: String) = p.split('/').last
-    val names = spark.createDataFrame(union.map(f =>
-      org.apache.spark.sql.Row(base(f.path), f1.contains(f.path), f2.contains(f.path))).asJava,
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField("_gfile", org.apache.spark.sql.types.StringType, false),
-        org.apache.spark.sql.types.StructField("_in1", org.apache.spark.sql.types.BooleanType, false),
-        org.apache.spark.sql.types.StructField("_in2", org.apache.spark.sql.types.BooleanType, false))))
-    val cur = s2.schema
-    val tagged = union.groupBy(_.schemaId).map { case (sid, group) =>
-      val g = spark.read.schema(s2.schemaFor(sid))
-        .parquet(group.map(f => s"$dir/${f.path}"): _*)
-      val have = g.columns.toSet
-      // align to the current schema INLINE so the _metadata file column can
-      // ride along (the align() helper projects it away)
-      g.select(cur.fields.toSeq.map { fl =>
-        if (have.contains(fl.name)) col(fl.name).cast(fl.dataType).as(fl.name)
-        else lit(null).cast(fl.dataType).as(fl.name)
-      } :+ element_at(split(col("_metadata.file_path"), "/"), -1).as("_gfile"): _*)
-    }.reduce(_.unionByName(_))
-    Some(tagged.join(broadcast(names), "_gfile").drop("_gfile"))
+    val in1 = s1.files.map(_.path).toSet
+    val in2 = s2.files.map(_.path).toSet
+    val union = s1.files ++ s2.files.filterNot(f => in1.contains(f.path))
+    val groups = statuses(union, s"v$v1/v$v2")
+      .groupBy { case (f, _) => (in1.contains(f.path), in2.contains(f.path)) }
+    // bucket pruning needs ONE bucket count (a feed across a rebucket has two)
+    val buckets = Some(s2.numBuckets).filter(_ == s1.numBuckets)
+    val parts = if (groups.isEmpty) Map((false, false) -> Nil) else groups
+    Some(parts.map { case ((a, b), fs) =>
+      scan(s2, fs, buckets).withColumn("_in1", lit(a)).withColumn("_in2", lit(b))
+    }.reduce(_.unionByName(_)))
   }
 
   /** The committed snapshot metadata at `version` (strict: every segment
@@ -306,16 +301,25 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     loadVersion(dir, version, io).getOrElse(throw new IllegalStateException(
       s"no committed snapshot v$version under $dir (never committed, or vacuumed)"))
 
-  private def readFiles(s: Snapshot, files: List[FileEntry]): DataFrame = {
+  private def readFiles(s: Snapshot, files: List[FileEntry]): DataFrame =
+    scan(s, statuses(files, s"v${s.version}"), Some(s.numBuckets))
+
+  /** Scan `files` aligned to `s`'s current schema, planned from the manifest
+    * (see [[ManifestFileIndex]]). Files are grouped by physical schema and
+    * each group is read with its EXACT written schema, then cast/realigned —
+    * old int32 files stay readable after a widen-to-long evolution without
+    * relying on reader-side type promotion. */
+  private def scan(s: Snapshot, files: List[(FileEntry, FileStatus)],
+                   numBuckets: Option[Int]): DataFrame = {
     val cur = s.schema
     if (files.isEmpty) return spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava, cur)
-    // Files are grouped by physical schema and each group is read with its EXACT
-    // written schema, then cast/realigned — old int32 files stay readable after a
-    // widen-to-long evolution without relying on reader-side type promotion.
-    files.groupBy(_.schemaId).map { case (sid, group) =>
-      val df = spark.read.schema(s.schemaFor(sid))
-        .parquet(group.map(f => s"$dir/${f.path}"): _*)
-      align(df, cur)
+    files.groupBy(_._1.schemaId).map { case (sid, group) =>
+      // nullable like every file-source read: a parquet column may hold nulls
+      // whatever the recorded schema says
+      val written = StructType(s.schemaFor(sid).fields.map(_.copy(nullable = true)))
+      val rel = HadoopFsRelation(new ManifestFileIndex(group, numBuckets), new StructType(),
+        written, None, new ParquetFileFormat(), Map.empty)(spark)
+      align(spark.baseRelationToDataFrame(rel), cur)
     }.reduce(_.unionByName(_))
   }
 
@@ -398,24 +402,26 @@ object LakeTable {
 
   private def manifestDir(dir: String): String = s"$dir/_manifests"
 
-  def exists(dir: String, io: LakeIO = NioLakeIO): Boolean =
-    io.isDirectory(manifestDir(dir)) && loadLatest(dir, io).isDefined
-
   def create(spark: SparkSession, dir: String, schema: StructType,
              numBuckets: Int = 64, io: LakeIO = NioLakeIO): LakeTable = {
     io.mkdirs(manifestDir(dir))
     val snap = Snapshot(1L, numBuckets, 0, Map("0" -> schema.json), Nil, Map.empty,
       Map("graft.operation" -> "create"))
-    writeManifest(dir, snap, io)
-    new LakeTable(spark, dir, io)
+    new LakeTable(spark, dir, io, writeManifest(dir, snap, io))
   }
 
   def load(spark: SparkSession, dir: String, io: LakeIO = NioLakeIO): LakeTable =
-    new LakeTable(spark, dir, io)
+    new LakeTable(spark, dir, io, loadLatest(dir, io).getOrElse(
+      throw new IllegalStateException(s"no manifest under $dir")))
 
+  /** Load the latest snapshot, reading its manifest once, or create the
+    * table when none is committed. */
   def loadOrCreate(spark: SparkSession, dir: String, schema: StructType,
                    numBuckets: Int = 64, io: LakeIO = NioLakeIO): LakeTable =
-    if (exists(dir, io)) load(spark, dir, io) else create(spark, dir, schema, numBuckets, io)
+    loadLatest(dir, io) match {
+      case Some(s) => new LakeTable(spark, dir, io, s)
+      case None => create(spark, dir, schema, numBuckets, io)
+    }
 
   /** Below this many files the file list inlines into the snapshot JSON; at or
     * above it, commits write bucket-range segment manifests and reuse
